@@ -74,5 +74,5 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    catalog.collect { case Q(n, _, Some(sql)) => n -> sql.trim }.toMap
+    catalog.flatMap(q => q.oracle.map(q.name -> _.trim)).toMap
 }

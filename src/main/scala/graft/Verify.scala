@@ -57,8 +57,18 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keepOracle(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // each oracle is built on its own: one that cannot be built (its
+    // artifact is missing) is written as a DuckDB error() carrying the
+    // reason, so the compare counts that query as failed, not absent
+    val oracles = SparkEntry.catalog.filter(o => keepOracle(o.name)).flatMap { o =>
+      try o.oracle.map(sql => o.name -> sql.trim)
+      catch { case e: Exception =>
+        System.err.println(s"[verify] ${o.name} oracle failed: ${e.getMessage}")
+        val why = s"oracle not built: ${e.getMessage}".replace("'", "''")
+        Some(o.name -> s"SELECT error('$why')")
+      }
+    }
+    val json = oracles.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

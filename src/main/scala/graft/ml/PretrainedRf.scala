@@ -9,12 +9,18 @@ import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Batch scoring with the reference's PRETRAINED model
-  * (predict_rf.py:15-52): load the persisted Spark 3.3.4
+/** Batch scoring with a PRETRAINED model, the reference's deployment
+  * shape (predict_rf.py:15-52): load a persisted
   * VectorAssembler+RandomForest pipeline, run the P5/P6/P9/P10 cleaning
   * chain, score, map predictions to DDoS/Normal labels (P2). The NDJSON
   * write (K3, replacing predict_rf.py:43's toPandas collect) is
   * exercised by PretrainedRfSpec.
+  *
+  * The model is the repo's own artifact at [[ModelPath]], not the
+  * reference's (its CIC-DDoS2019 training CSVs are not shipped): a
+  * forest with the reference's parameters (100 trees, depth 6, gini,
+  * sqrt, seed 42) fitted on seeded, ground-truth-labelled flows whose
+  * classes overlap. [[PretrainedRfTrainer]] regenerates the same forest.
   *
   * Correctness: unlike q_rf_train_score (whose model is fit at query
   * time), the pretrained forest is a fixed artifact — so its scoring IS
@@ -29,18 +35,45 @@ import org.apache.spark.sql.functions._
   */
 object PretrainedRf {
 
-  val ModelPath = "/root/reference/spark_app/ml_model/rf_binary_model"
+  /** Relative to the repository root, the working directory of sbt's
+    * runs and tests.
+    */
+  val ModelPath = "models/rf_binary_model"
 
-  /** Loaded once per JVM; MLlib persistence is language- and
-    * version-neutral here (3.3.4 artifact in 4.1, proven by
-    * RfDetectorSpec's load test).
+  /** Loaded once per JVM, on first use: listing the catalog never reads
+    * it (see [[graft.Q]]).
     */
   lazy val model: PipelineModel = {
     // model load needs an active SparkContext; tools that touch the
     // catalog before building their session get a small local one
     if (SparkSession.getActiveSession.isEmpty && SparkSession.getDefaultSession.isEmpty)
       graft.GraftSession.getOrCreate("2")
-    PipelineModel.load(ModelPath)
+    load(ModelPath)
+  }
+
+  /** Loads a persisted pipeline and refuses one that the scorers and
+    * TreeSql cannot use: the stages must be a VectorAssembler over
+    * RfDetector.featureCols (in order) and a binary random forest.
+    */
+  def load(path: String): PipelineModel = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val fs = dir.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+    def refuse(why: String): Nothing =
+      throw new IllegalArgumentException(s"detector model at ${fs.makeQualified(dir)}: $why " +
+        "(regenerate it with `sbt \"runMain graft.ml.PretrainedRfTrainer\"`)")
+    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "metadata"))) refuse("not found")
+    val m = PipelineModel.load(path)
+    m.stages match {
+      case Array(va: VectorAssembler, rf: RandomForestClassificationModel) =>
+        if (va.getInputCols.toSeq != RfDetector.featureCols)
+          refuse(s"assembler inputs are not the ${RfDetector.featureCols.size} " +
+            s"RfDetector.featureCols in order (got ${va.getInputCols.length} columns)")
+        if (rf.numClasses != 2) refuse(s"forest has ${rf.numClasses} classes, not 2")
+      case other =>
+        refuse(s"stages are ${other.map(_.getClass.getSimpleName).mkString("[", ", ", "]")}, " +
+          "not [VectorAssembler, RandomForestClassificationModel]")
+    }
+    m
   }
 
   def assembler: VectorAssembler = model.stages(0).asInstanceOf[VectorAssembler]

@@ -20,6 +20,17 @@ class DetectionPipelineSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** The non-empty part files of committed sink batches. The sink
+    * (Sinks.writeNdjsonNonEmpty) writes an empty trigger as a zero-byte
+    * part file and then deletes that batch's directory, so a part file
+    * counts only once its directory holds `_SUCCESS` and it has bytes.
+    */
+  private def verdictFiles(outDir: String): Array[java.io.File] =
+    Option(new java.io.File(outDir).listFiles()).getOrElse(Array.empty)
+      .filter(b => new java.io.File(b, "_SUCCESS").exists())
+      .flatMap(b => Option(b.listFiles()).getOrElse(Array.empty))
+      .filter(f => f.getName.endsWith(".json") && f.length() > 0)
+
   test("raw JSON stream to labeled flow files") {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -45,11 +56,7 @@ class DetectionPipelineSpec extends AnyFunSuite {
       input.addData(burst: _*)
       // wait for the session timeout to flush the flow through the sink
       val deadline = System.currentTimeMillis() + 60000
-      def files() = {
-        val d = new java.io.File(outDir)
-        Option(d.listFiles()).getOrElse(Array.empty).flatMap(b =>
-          Option(b.listFiles()).getOrElse(Array.empty)).filter(_.getName.endsWith(".json"))
-      }
+      def files() = verdictFiles(outDir)
       while (files().isEmpty && System.currentTimeMillis() < deadline)
         Thread.sleep(250)
       val jsonFiles = files()
@@ -67,8 +74,9 @@ class DetectionPipelineSpec extends AnyFunSuite {
   test("streaming scoring with the reference's PRETRAINED model (main.py:1065-1090 parity)") {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    // the exact deployment shape: load the persisted 3.3.4 pipeline once
-    // on the driver, score the completed-flow stream statelessly with it
+    // the exact deployment shape: load the persisted pipeline (the repo's
+    // model at PretrainedRf.ModelPath) once on the driver, score the
+    // completed-flow stream statelessly with it
     val model = ml.PretrainedRf.model
     val outDir = Files.createTempDirectory("pipe_pre_out").toString
     val ckpt = Files.createTempDirectory("pipe_pre_ckpt").toString
@@ -84,11 +92,7 @@ class DetectionPipelineSpec extends AnyFunSuite {
       }
       input.addData(burst: _*)
       val deadline = System.currentTimeMillis() + 60000
-      def files() = {
-        val d = new java.io.File(outDir)
-        Option(d.listFiles()).getOrElse(Array.empty).flatMap(b =>
-          Option(b.listFiles()).getOrElse(Array.empty)).filter(_.getName.endsWith(".json"))
-      }
+      def files() = verdictFiles(outDir)
       while (files().isEmpty && System.currentTimeMillis() < deadline)
         Thread.sleep(250)
       assert(files().nonEmpty, "no sink output within 60s")

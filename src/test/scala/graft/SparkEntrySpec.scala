@@ -59,4 +59,11 @@ class SparkEntrySpec extends AnyFunSuite {
         "q_rf_compiled_score", "q_range_join_tiers"))
       assert(names.contains(required), s"missing $required")
   }
+
+  test("a query's oracle is built when read, not when the catalog is listed") {
+    val q = Q("q_probe", (s, _) => s.range(1).toDF(), sys.error("oracle artifact missing"))
+    assert(q.name == "q_probe")
+    val e = intercept[RuntimeException](q.oracle)
+    assert(e.getMessage == "oracle artifact missing")
+  }
 }

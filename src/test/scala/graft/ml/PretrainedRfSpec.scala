@@ -9,7 +9,8 @@ import java.nio.file.Files
 
 /** predict_rf.py parity: pretrained-model batch scoring (S5 load, P5-P10
   * clean, RF transform, P2 label map, K3 NDJSON sink) plus the TreeSql
-  * compilation proof — the compiled SQL form of the 100-tree forest must
+  * compilation proof over the repo's persisted model
+  * (PretrainedRf.ModelPath) — the compiled SQL form of the 100-tree forest must
   * reproduce MLlib's raw votes and predictions BIT-FOR-BIT, since it is
   * the DuckDB oracle for q_rf_pretrained_score.
   */
@@ -96,12 +97,35 @@ class PretrainedRfSpec extends AnyFunSuite {
     assert(compiled.size == 2000)
     assert(compiled == mllib)
     // the sweep must route rows through many distinct leaf combinations
-    // (class diversity is covered on the real corpus, where the model
-    // flags 10/750 flows DDoS and still bit-matches)
+    // (it also carries the class diversity: the repo's model flags 0 of
+    // the real corpus' 750 sf0.01 flows DDoS, but 5 of these 2000
+    // vectors, and both classes bit-match)
     val distinctVotes = compiled.values.map(_._1).toSet.size
     assert(distinctVotes > 500, s"sweep too uniform: $distinctVotes distinct vote sums")
     synth.unpersist(blocking = false)
     ()
+  }
+
+  test("load refuses a missing, one-class or misassembled model and names its path") {
+    import spark.implicits._
+    import org.apache.spark.ml.Pipeline
+    import org.apache.spark.ml.feature.VectorAssembler
+    def refusal(path: String): String =
+      intercept[IllegalArgumentException](PretrainedRf.load(path)).getMessage
+    val root = Files.createTempDirectory("prf_refuse").toString
+    assert(refusal(s"$root/absent").contains(s"$root/absent: not found"))
+    val labelled = PretrainedRfTrainer.flows(n = 40).toDF("f", "binary_label")
+      .select("f.*", "binary_label")
+    // one class: TreeSql has no class-1 vote to compile
+    RfDetector.pipeline(numTrees = 2).fit(labelled.where($"binary_label" === 0.0))
+      .write.save(s"$root/one_class")
+    assert(refusal(s"$root/one_class").contains(s"$root/one_class: forest has 1 classes"))
+    // features out of order: the compiled SQL would read the wrong columns
+    val rf = RfDetector.pipeline(numTrees = 2).getStages(1)
+    val reversed = new VectorAssembler()
+      .setInputCols(RfDetector.featureCols.reverse.toArray).setOutputCol("features")
+    new Pipeline().setStages(Array(reversed, rf)).fit(labelled).write.save(s"$root/reversed")
+    assert(refusal(s"$root/reversed").contains(s"$root/reversed: assembler inputs"))
   }
 
   test("vote margins are far above fp noise (cross-engine determinism headroom)") {
