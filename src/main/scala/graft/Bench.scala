@@ -135,6 +135,19 @@ object Bench {
     "q_cidr_block_match" -> 0.67,
     "q_rate_window_stream" -> 1.86)
 
+  /** The newest `<prefix>_r<N>.json` in the working directory (highest
+    * N wins), if any.
+    */
+  private def latestRoundRecord(prefix: String): Option[java.io.File] = {
+    val re = (java.util.regex.Pattern.quote(prefix) + "_r(\\d+)\\.json").r
+    Option(new java.io.File(".").listFiles()).toSeq.flatten
+      .flatMap(f => f.getName match {
+        case re(n) => Some(n.toInt -> f)
+        case _ => None
+      })
+      .maxByOption(_._1).map(_._2)
+  }
+
   /** Per-query cost model from the LATEST committed round record
     * (`<prefix>_r<N>.json` at the repo root, highest N wins): swept
     * seconds per query plus stage-build seconds charged to it. Used to
@@ -145,15 +158,7 @@ object Bench {
     * degrade to fixed-size grouping — never a crash.
     */
   private[graft] def latestRoundCosts(prefix: String): (String, Map[String, Double], Map[String, Double]) = {
-    val re = (java.util.regex.Pattern.quote(prefix) + "_r(\\d+)\\.json").r
-    val candidates = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-      .toSeq.flatMap { f =>
-        f.getName match {
-          case re(n) => Some(n.toInt -> f)
-          case _ => None
-        }
-      }
-    candidates.sortBy(-_._1).headOption.map { case (_, f) =>
+    latestRoundRecord(prefix).map { f =>
       try {
         val om = new com.fasterxml.jackson.databind.ObjectMapper()
         val root = om.readTree(java.nio.file.Files.readString(f.toPath))
@@ -203,15 +208,7 @@ object Bench {
     * order) — never a crash.
     */
   private[graft] def latestRoundTouches(prefix: String): (Seq[(String, String)], Map[String, Double]) = {
-    val re = (java.util.regex.Pattern.quote(prefix) + "_r(\\d+)\\.json").r
-    val candidates = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-      .toSeq.flatMap { f =>
-        f.getName match {
-          case re(n) => Some(n.toInt -> f)
-          case _ => None
-        }
-      }
-    candidates.sortBy(-_._1).headOption.map { case (_, f) =>
+    latestRoundRecord(prefix).map { f =>
       try {
         val om = new com.fasterxml.jackson.databind.ObjectMapper()
         val root = om.readTree(java.nio.file.Files.readString(f.toPath))

@@ -13,45 +13,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GraftSession {
 
-  /** Run `body` with shuffle parallelism sized for STREAMING STATE
-    * rather than batch scans: every stateful streaming operator opens
-    * one state-store instance per shuffle partition (joins open four)
-    * and pays a commit per instance per micro-batch, so a batch-sized
-    * 32 means 32-128 store commits per trigger for streams whose state
-    * fits in a handful. On a cluster this is the
-    * `spark.sql.shuffle.partitions` you set on the streaming job,
-    * independent of batch parallelism; here it is scoped to the query
-    * and restored after. State-partition count only affects layout,
-    * not results (the suite is green at 4 and 32 cores).
+  /** Default streaming state-partition count, and the floor of
+    * [[adaptiveStreamParts]] unless a caller passes its own. 8 is the
+    * measured local optimum for the streaming family (MEASUREMENT_r21's
+    * three-point 8/4/2 curve).
     */
-  /** @param noDataBatch whether the terminating run keeps the final
-    *   watermark-only no-data micro-batch. Measured (StreamFloorProbe,
-    *   sf0.1): that batch costs 0.3–0.9 s of pure state-store
-    *   open/commit for ZERO rows. Pass `false` ONLY where emissions
-    *   cannot come from watermark or timer advancement — update- and
-    *   complete-mode sinks, transformWithState under TimeMode.None,
-    *   append-mode dedup (emits on first sight) and append-mode INNER
-    *   interval joins (match-time emission): for those the batch only
-    *   evicts state and the results are bit-identical without it.
-    *   KEEP it (default) for append-mode left joins (null emission =
-    *   state expiry), event-time timers (session close), append-mode
-    *   windowed aggregation (watermark-close emission), and
-    *   processing-time timeouts (the featurizer family). On a live
-    *   cluster the flag flips back on for liveness; it is a
-    *   terminating-run (AvailableNow) economy.
-    */
-  /** Default streaming state-partition count. SPARK_GRAFT_STREAM_PARTS
-    * is the CLUSTER-OPERATOR PIN for the whole adaptive streaming
-    * family (r21 widened its scope): it overrides this default AND
-    * short-circuits [[adaptiveStreamParts]] at every adaptive call
-    * site, including operators that previously hardcoded their count
-    * (stream-stream joins at 2, sketch streams at 8). Callers passing
-    * an explicit `n` to [[withStreamingShuffle]] are untouched. A
-    * malformed value degrades to the default instead of crashing every
-    * adaptive streaming query (r21 ADVICE).
-    */
-  private val DefaultStreamParts: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").flatMap(_.toIntOption).getOrElse(8)
+  private val DefaultStreamParts = 8
 
   /** Floor for stream-stream JOIN state partitions: their measured
     * local optimum (r15 StreamFloorProbe: 8 partitions 2.9 s total, 2:
@@ -68,14 +35,6 @@ object GraftSession {
     */
   val StreamBytesPerPartition: Long = 8L << 20
 
-  /** Probe/test hook: when set, [[adaptiveStreamParts]] returns this
-    * value — lets one session interleave partition-count variants
-    * (R21PartsProbe) so machine drift hits both sides of an A/B.
-    * Callers passing an explicit `n` to [[withStreamingShuffle]] are
-    * deliberately NOT affected.
-    */
-  @volatile var streamPartsOverride: Option[Int] = None
-
   private val streamBytes =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
@@ -88,8 +47,8 @@ object GraftSession {
     *                          defaultParallelism))
     *
     * The FLOOR is the measured local optimum, not a guess: the r21
-    * three-point interleaved probe (R21PartsProbe, MEASUREMENT_r21)
-    * read the 8-vs-4-vs-2 curve as flat within noise for most of the
+    * three-point interleaved A/B (MEASUREMENT_r21) read the
+    * 8-vs-4-vs-2 curve as flat within noise for most of the
     * streaming family but MONOTONICALLY WORSE below 8 for the
     * compute-per-key-heavy RocksDB queries (q_tws_top_event_type
     * 1.04/1.13/1.39 s at 8/4/2 — parallelism of per-key work, not
@@ -100,63 +59,81 @@ object GraftSession {
     * cap too — low-core bench bases are unchanged), and the count
     * grows with the stream beyond that, capped at defaultParallelism.
     * `storesPerPartition` weights operators that open several stores
-    * per partition (stream-stream joins: 4). Resolution order:
-    * [[streamPartsOverride]] (in-session probe hook) >
-    * SPARK_GRAFT_STREAM_PARTS (cluster-operator pin) > the size rule.
-    * The table's byte size is one driver-side FS call, cached per
-    * path. Results are unaffected — state-partition count only
-    * changes layout (every streaming query is oracle-gated).
+    * per partition (stream-stream joins: 4). The table's byte size is
+    * one driver-side FS call, cached per path. Results are unaffected
+    * — state-partition count only changes layout (every streaming
+    * query is oracle-gated).
     */
   def adaptiveStreamParts(spark: SparkSession, sfDir: String,
       table: String = "events", storesPerPartition: Int = 1,
-      floor: Int = -1): Int =
-    streamPartsOverride.getOrElse {
-      sys.env.get("SPARK_GRAFT_STREAM_PARTS").flatMap(_.toIntOption).getOrElse {
-        val path = s"$sfDir/$table.parquet"
-        // cache only SUCCESSFUL positive sizes (r21 ADVICE): a table
-        // generated or replaced later in the same JVM (Sf1Probe replica
-        // creation) must not keep resolving to a cached 0/error floor
-        val cached = streamBytes.get(path)
-        val bytes: Long = if (cached != null) cached.longValue else {
-          val computed = try {
-            val hp = new org.apache.hadoop.fs.Path(path)
-            val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (fs.exists(hp)) fs.getContentSummary(hp).getLength else 0L
-          } catch { case _: Exception => 0L }
-          if (computed > 0L) streamBytes.put(path, computed)
-          computed
-        }
-        val raw = math.ceil(
-          bytes.toDouble / (StreamBytesPerPartition.toDouble * storesPerPartition)).toInt
-        val f = if (floor > 0) floor else DefaultStreamParts
-        math.max(f, math.min(raw, spark.sparkContext.defaultParallelism))
-      }
+      floor: Int = -1): Int = {
+    val path = s"$sfDir/$table.parquet"
+    // cache only SUCCESSFUL positive sizes (r21 ADVICE): a table
+    // generated or replaced later in the same JVM (Sf1Probe replica
+    // creation) must not keep resolving to a cached 0/error floor
+    val cached = streamBytes.get(path)
+    val bytes: Long = if (cached != null) cached.longValue else {
+      val computed = try {
+        val hp = new org.apache.hadoop.fs.Path(path)
+        val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (fs.exists(hp)) fs.getContentSummary(hp).getLength else 0L
+      } catch { case _: Exception => 0L }
+      if (computed > 0L) streamBytes.put(path, computed)
+      computed
     }
+    val raw = math.ceil(
+      bytes.toDouble / (StreamBytesPerPartition.toDouble * storesPerPartition)).toInt
+    val f = if (floor > 0) floor else DefaultStreamParts
+    math.max(f, math.min(raw, spark.sparkContext.defaultParallelism))
+  }
 
+  /** Run `body` with shuffle parallelism sized for STREAMING STATE
+    * rather than batch scans: every stateful streaming operator opens
+    * one state-store instance per shuffle partition (joins open four)
+    * and pays a commit per instance per micro-batch, so a batch-sized
+    * 32 means 32-128 store commits per trigger for streams whose state
+    * fits in a handful. On a cluster this is the
+    * `spark.sql.shuffle.partitions` you set on the streaming job,
+    * independent of batch parallelism; here it is scoped to the query
+    * and restored after. State-partition count only affects layout,
+    * not results (the suite is green at 4 and 32 cores).
+    *
+    * @param n state partitions; non-positive means the default (8).
+    * @param noDataBatch whether the terminating run keeps the final
+    *   watermark-only no-data micro-batch. Measured (StreamFloorProbe,
+    *   sf0.1): that batch costs 0.3–0.9 s of pure state-store
+    *   open/commit for ZERO rows. Pass `false` ONLY where emissions
+    *   cannot come from watermark or timer advancement — update- and
+    *   complete-mode sinks, transformWithState under TimeMode.None,
+    *   append-mode dedup (emits on first sight) and append-mode INNER
+    *   interval joins (match-time emission): for those the batch only
+    *   evicts state and the results are bit-identical without it.
+    *   KEEP it (default) for append-mode left joins (null emission =
+    *   state expiry), event-time timers (session close), append-mode
+    *   windowed aggregation (watermark-close emission), and
+    *   processing-time timeouts (the featurizer family). On a live
+    *   cluster the flag flips back on for liveness; it is a
+    *   terminating-run (AvailableNow) economy.
+    */
   def withStreamingShuffle[A](spark: SparkSession, n: Int = -1,
       noDataBatch: Boolean = true)(body: => A): A = {
     val parts = if (n > 0) n else DefaultStreamParts
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+    val prevNoData = spark.conf.getOption(noData)
     spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
     try {
-      if (noDataBatch) body
-      else withConf(spark,
-        "spark.sql.streaming.noDataMicroBatches.enabled", "false")(body)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** Scope one session conf to `body`, restoring the prior value —
-    * the generic shape of [[withStreamingShuffle]] for per-query
-    * streaming knobs.
-    */
-  def withConf[A](spark: SparkSession, key: String, value: String)(body: => A): A = {
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prior match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
+      if (!noDataBatch) spark.conf.set(noData, "false")
+      body
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      if (!noDataBatch) prevNoData match {
+        case Some(p) => spark.conf.set(noData, p)
+        case None => spark.conf.unset(noData)
+      }
     }
   }
+
   // Per-session registry of memory-sink view names handed out by
   // [[newSinkName]] — weak keys so a stopped session can never alias a
   // later one (the StageViews lifecycle).
@@ -236,8 +213,8 @@ object Tables {
     *
     * `spark.read.parquet(path)` without a schema runs file listing AND
     * footer schema inference on the driver at construction time —
-    * measured at 45–70 ms per call (R22ReadProbe) vs ~6 ms with the
-    * schema provided. Every catalog query constructs its base tables
+    * measured at 45–70 ms per call (OPTIMIZATION_r22) vs ~6 ms with
+    * the schema provided. Every catalog query constructs its base tables
     * inside the bench's timed region, twice (min-of-two), so inference
     * was a fixed ~0.05–0.15 s tax on nearly all 232 queries. The
     * schema of a written parquet table is immutable, so the first

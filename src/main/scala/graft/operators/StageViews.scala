@@ -73,8 +73,8 @@ private[graft] object StageViews {
   // Opt-in build attribution (Bench/Sf1Probe): when set, every
   // ensureCached registration eagerly materializes the relation with a
   // timed count() and records who paid for it. Default OFF so
-  // explain-only consumers (PlanHygieneSpec, ExplainAudit) keep the
-  // lazy no-execution semantics.
+  // explain-only consumers (PlanHygieneSpec) keep the lazy
+  // no-execution semantics.
   @volatile private var attributionLabel: Option[() => String] = None
   private val builds = mutable.ArrayBuffer.empty[Build]
 

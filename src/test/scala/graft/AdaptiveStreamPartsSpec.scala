@@ -15,9 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * at every core count, and the count grows with the stream beyond the
   * floor×8 MiB knee. These laws pin the floor dominance (including
   * over the core cap — low-core bench bases must not move), the
-  * growth region, the storesPerPartition weighting, the
-  * probe-override precedence, and the missing-file degrade so a path
-  * typo can never crash a catalog query.
+  * growth region, the storesPerPartition weighting, and the
+  * missing-file degrade so a path typo can never crash a catalog
+  * query.
   */
 class AdaptiveStreamPartsSpec extends AnyFunSuite {
 
@@ -81,11 +81,5 @@ class AdaptiveStreamPartsSpec extends AnyFunSuite {
     assert(GraftSession.adaptiveStreamParts(spark, "/nonexistent/dir") == 8)
     assert(GraftSession.adaptiveStreamParts(spark, "/nonexistent/dir",
       floor = GraftSession.MinStreamParts) == GraftSession.MinStreamParts)
-  }
-
-  test("probe override takes precedence over the size rule") {
-    GraftSession.streamPartsOverride = Some(7)
-    try assert(GraftSession.adaptiveStreamParts(spark, dirWithEvents(1L)) == 7)
-    finally GraftSession.streamPartsOverride = None
   }
 }

@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins that predicates and projections reach the parquet scan — the
   * two properties that decide whether a 100 TB read touches terabytes
-  * or gigabytes. ExplainAudit prints these for eyeballing; this makes
-  * the two load-bearing cases part of `sbt test`.
+  * or gigabytes. `graft.Diag plan` prints these for eyeballing; this
+  * makes the two load-bearing cases part of `sbt test`.
   */
 class PushdownSpec extends AnyFunSuite {
 
