@@ -2,6 +2,7 @@ package graft
 
 import graft.flow.{FlowFeaturizer, PacketRow}
 import graft.ingest.PacketIngest
+import graft.ml.ForestScorer
 import graft.sink.Sinks
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -13,8 +14,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   *   packet JSON stream → from_json decode (S2) → canonical flow key
   *   (P1) → stateful featurizer with 60 s session timeout (A1) →
-  *   completed-flow filter (P3) → RF scoring (stateless transform) →
-  *   DDoS/Normal label (P2) → foreachBatch JSON sink (K1)
+  *   completed-flow filter (P3) → RF scoring (a broadcast
+  *   [[graft.ml.ForestScorer]], built once per query) → DDoS/Normal
+  *   label (P2) → foreachBatch JSON sink (K1)
   *
   * vs the reference: no Arrow/Python boundary, only-final emission (the
   * reference emits every-batch rows it immediately filters out,
@@ -33,12 +35,21 @@ object DetectionPipeline {
     FlowFeaturizer.featurize(packets, timeoutMs)
   }
 
-  /** Score finalized flows and attach the P2 label. */
+  /** Score finalized flows and attach the P2 label: one filter (the P3
+    * `_TIMEOUT` flows whose features the model's assembler keeps) and
+    * one projection, with the model's broadcast [[ForestScorer]]. Same
+    * rows and `prediction` as `model.transform`, same six columns.
+    */
   def scored(flows: DataFrame, model: PipelineModel): DataFrame =
-    model.transform(flows.filter(instr(col("flow_id"), "_TIMEOUT") > 0))
-      .withColumn("Label", when(col("prediction") === 1.0, "DDoS").otherwise("Normal"))
-      .select("flow_id", "source_ip", "destination_ip", "timestamp_us",
-        "prediction", "Label")
+    scored(flows, ForestScorer.of(model, flows.sparkSession))
+
+  private def scored(flows: DataFrame, scorer: ForestScorer): DataFrame = {
+    val prediction = scorer.prediction
+    flows.filter(instr(col("flow_id"), "_TIMEOUT") > 0 && scorer.keep(flows.schema))
+      .select(col("flow_id"), col("source_ip"), col("destination_ip"), col("timestamp_us"),
+        prediction.as("prediction"),
+        when(prediction === 1.0, "DDoS").otherwise("Normal").as("Label"))
+  }
 
   /** Switch streaming state to RocksDB: at production scale the flow
     * state (one entry per live flow) must spill instead of living in
@@ -50,15 +61,17 @@ object DetectionPipeline {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
   /** Full pipeline: raw JSON stream → labeled completed flows → JSON
-    * files under outDir (one dir per micro-batch).
+    * files under outDir (one dir per micro-batch). The model's scorer is
+    * resolved before the query starts: a model it cannot score fails
+    * here, naming its stages, and no query is started.
     */
   def start(raw: DataFrame, model: PipelineModel, outDir: String,
       checkpoint: String, timeoutMs: Long = FlowFeaturizer.DefaultTimeoutMs,
       triggerInterval: String = "5 seconds"): StreamingQuery = {
-    val flows = flowsOf(raw, timeoutMs)
-    val spark = raw.sparkSession
-    import spark.implicits._
-    flows.toDF()
+    val flows = flowsOf(raw, timeoutMs).toDF()
+    val scorer = ForestScorer.of(model, raw.sparkSession)
+    scorer.keep(flows.schema) // refuses inputs the flows lack, before the query starts
+    flows
       .writeStream
       .outputMode("update")
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerInterval))
@@ -74,7 +87,7 @@ object DetectionPipeline {
         // variant). Emptiness is decided AFTER the write from the
         // committed part-file lengths — metadata only — and empty
         // trigger dirs are removed (FLOOR_r19_detection.txt).
-        Sinks.writeNdjsonNonEmpty(scored(batch, model), s"$outDir/batch=$batchId")
+        Sinks.writeNdjsonNonEmpty(scored(batch, scorer), s"$outDir/batch=$batchId")
         ()
       }
       .start()

@@ -358,7 +358,7 @@ ORDER BY user_id, start_us"""))
 
   case class ChainEvent(user_id: Long, event_type: String, ts_us: Long, event_id: Long)
   case class ChainStats(user_id: Long, event_type: String, n_events: Long, n_kept: Long)
-  private case class ChainState(last_kept_ts: Long, n_events: Long, n_kept: Long)
+  case class ChainState(last_kept_ts: Long, n_events: Long, n_kept: Long)
 
   /** Keep-CHAIN debouncing — the variant [[Behavior.qDebounce]]'s lag
     * spelling explicitly cannot express: the clock resets only on KEPT
@@ -467,7 +467,7 @@ ORDER BY event_type""")
 
   case class TbEvent(user_id: Long, ts_us: Long, event_id: Long)
   case class TbStats(user_id: Long, n_events: Long, n_allowed: Long)
-  private case class TbState(
+  case class TbState(
       tokens: Long, last_ts: Long, n_events: Long, n_allowed: Long)
 
   /** Token-bucket parameters, in exact micro-tokens: capacity 2

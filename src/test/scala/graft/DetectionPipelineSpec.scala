@@ -111,4 +111,56 @@ class DetectionPipelineSpec extends AnyFunSuite {
       assert(r.getAs[String]("Label") == batchScored.getAs[String]("Label"))
     } finally q.stop()
   }
+
+  test("start refuses a model it cannot score before any query starts, naming its stages") {
+    import spark.implicits._
+    import org.apache.spark.ml.{Pipeline, PipelineStage}
+    import org.apache.spark.ml.linalg.Vectors
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val (va, rf) = (ml.PretrainedRf.assembler, ml.PretrainedRf.rf)
+    val feats = spark.range(1).selectExpr(ml.RfDetector.featureCols.map(c => s"0D AS $c"): _*)
+    val vectors = Seq(Tuple1(Vectors.dense(0.0))).toDF("features")
+    val strict = va.copy(org.apache.spark.ml.param.ParamMap.empty).setHandleInvalid("error")
+    val alien = new org.apache.spark.ml.feature.VectorAssembler()
+      .setInputCols(Array("no_such_col")).setOutputCol("features").setHandleInvalid("skip")
+    val expected = "expected [VectorAssembler, ProbabilisticClassificationModel over Vector]"
+    for ((stages, data, why) <- Seq(
+        (Seq(va), feats, s"with stages [VectorAssembler]: $expected"),
+        (Seq(rf), vectors, s"with stages [RandomForestClassificationModel]: $expected"),
+        (Seq(strict, rf), feats,
+          "with stages [VectorAssembler, RandomForestClassificationModel]: assembler handleInvalid is error"),
+        (Seq(alien, rf), spark.range(1).selectExpr("0D AS no_such_col"),
+          "scorer input column `no_such_col` is missing"))) {
+      val model = new Pipeline().setStages(stages.toArray[PipelineStage]).fit(data)
+      val ckpt = Files.createTempDirectory("pipe_refuse_ckpt")
+      val e = intercept[IllegalArgumentException](DetectionPipeline.start(
+        MemoryStream[String].toDS().toDF("value"), model,
+        Files.createTempDirectory("pipe_refuse_out").toString, ckpt.toString))
+      assert(e.getMessage.contains(why), e.getMessage)
+      assert(spark.streams.active.isEmpty)
+      assert(Option(ckpt.toFile.list()).forall(_.isEmpty), "the query wrote its checkpoint")
+    }
+  }
+
+  test("scoring one model over several batches uses one scorer and one broadcast") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    val model = ml.PretrainedRf.model
+    val scorer = ml.ForestScorer.of(model, spark)
+    val udfs = (0 until 3).flatMap { i =>
+      val flows = Seq(flow.FlowFeaturizer.features(
+        flow.FlowFeaturizer.foldBatch(None, (0 until 4).map { k =>
+          PacketRow(k.toLong, 1000L * k, 6, 60 + i, "10.2.0.1", "10.2.0.2", 2000 + i, 80,
+            0, 0, 0, 1, 0, 0, 0, 0, 0, 0)
+        }), "_TIMEOUT")).toDS().toDF()
+      val batch = DetectionPipeline.scored(flows, model)
+      assert(batch.collect().length == 1)
+      batch.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect { case u: ScalaUDF => u.function }))
+    }
+    // prediction and Label read the same UDF in each of the 3 batches
+    assert(udfs.size == 6)
+    assert(udfs.forall(_ eq udfs.head), "a batch built its own predict UDF")
+    // the scorer, and with it the one broadcast of the forest, is reused
+    assert(ml.ForestScorer.of(model, spark) eq scorer)
+  }
 }

@@ -27,6 +27,21 @@ class PretrainedRfSpec extends AnyFunSuite {
 
   lazy val flows = BatchFlowFeaturizer.fromEvents(Tables.events(spark, sf)).cache()
 
+  /** 2000 synthetic off-corpus feature vectors (`id` plus the model's
+    * input columns as doubles): deterministic pseudo-random features
+    * spanning each split's threshold neighborhood (no Math.random:
+    * xxhash64-derived), so boundary behavior (<= vs <) is exercised away
+    * from the real corpus' value distribution.
+    */
+  private def sweep = {
+    // per-feature scale spans 0.1×..10^5× so thresholds at any
+    // magnitude (packet counts vs byte rates vs µs IATs) get crossed
+    val featExprs = PretrainedRf.assembler.getInputCols.zipWithIndex.map { case (c, k) =>
+      s"CAST(pmod(xxhash64(id, $k), 2000) AS DOUBLE) * CAST(pow(10.0, CAST(pmod(xxhash64(id, ${k + 100}), 7) AS DOUBLE) - 1.0) AS DOUBLE) AS `$c`"
+    }
+    spark.range(2000).selectExpr("id" +: featExprs: _*)
+  }
+
   test("compiled tree SQL reproduces MLlib votes and predictions bit-for-bit") {
     import spark.implicits._
     val cols = PretrainedRf.assembler.getInputCols
@@ -72,17 +87,8 @@ class PretrainedRfSpec extends AnyFunSuite {
 
   test("compiled SQL matches MLlib on 2000 synthetic off-corpus vectors") {
     import spark.implicits._
-    // deterministic pseudo-random features spanning each split's
-    // threshold neighborhood (no Math.random: xxhash64-derived), so
-    // boundary behavior (<= vs <) is exercised away from the real
-    // corpus' value distribution
     val cols = PretrainedRf.assembler.getInputCols
-    // per-feature scale spans 0.1×..10^5× so thresholds at any
-    // magnitude (packet counts vs byte rates vs µs IATs) get crossed
-    val featExprs = cols.zipWithIndex.map { case (c, k) =>
-      s"CAST(pmod(xxhash64(id, $k), 2000) AS DOUBLE) * CAST(pow(10.0, CAST(pmod(xxhash64(id, ${k + 100}), 7) AS DOUBLE) - 1.0) AS DOUBLE) AS `$c`"
-    }
-    val synth = spark.range(2000).selectExpr("id" +: featExprs: _*).cache()
+    val synth = sweep.cache()
     synth.createOrReplaceTempView("prf_synth")
     val compiled = spark.sql(s"""
       SELECT id, v1, ${TreeSql.predictionSql()} AS prediction
@@ -138,5 +144,44 @@ class PretrainedRfSpec extends AnyFunSuite {
     // coarsest leaf probabilities make that structurally implausible —
     // pin a generous floor so any future near-tie is caught loudly.
     assert(margins > 1e-6, s"min |v1-v0| = $margins")
+  }
+
+  test("DetectionPipeline.scored predicts as model.transform on the sweep; null and NaN rows are dropped") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val labelled = PretrainedRfTrainer.flows(n = 400).toDF("f", "binary_label")
+      .select("f.*", "binary_label")
+    val small = RfDetector.train(labelled, numTrees = 5).model
+    // the sweep as completed flows, plus one row with a null feature and
+    // one with a NaN feature: the assembler's handleInvalid("skip")
+    // drops both, so scored must too
+    val base = sweep.union(sweep.where($"id" < 2).withColumn("id", $"id" + 2000))
+    val bad = PretrainedRf.assembler.getInputCols(3)
+    val flows = base
+      .withColumn(bad, when($"id" === 2000, lit(null).cast("double"))
+        .when($"id" === 2001, lit(Double.NaN)).otherwise(col(bad)))
+      .withColumn("flow_id", concat(lit("f"), $"id".cast("string"), lit("_TIMEOUT")))
+      .withColumn("source_ip", lit("10.9.0.1"))
+      .withColumn("destination_ip", lit("10.9.0.2"))
+      .withColumn("timestamp_us", $"id")
+      .cache()
+    for ((name, model) <- Seq("committed" -> PretrainedRf.model, "5-tree" -> small)) {
+      val got = graft.DetectionPipeline.scored(flows, model)
+      assert(got.columns.toSeq ==
+        Seq("flow_id", "source_ip", "destination_ip", "timestamp_us", "prediction", "Label"))
+      assert(got.schema.map(_.dataType.simpleString) ==
+        Seq("string", "string", "string", "bigint", "double", "string"))
+      val scored = got.collect().map(r =>
+        r.getString(0) -> ((r.getAs[Double]("prediction"), r.getAs[String]("Label")))).toMap
+      val want = model.transform(flows)
+        .select($"flow_id", $"prediction",
+          when($"prediction" === 1.0, "DDoS").otherwise("Normal").as("Label"))
+        .collect().map(r => r.getString(0) -> ((r.getDouble(1), r.getString(2)))).toMap
+      assert(want.size == 2000, name)
+      assert(scored == want, name)
+      if (name == "committed") assert(scored.values.map(_._2).toSet == Set("DDoS", "Normal"))
+    }
+    flows.unpersist(blocking = false)
+    ()
   }
 }

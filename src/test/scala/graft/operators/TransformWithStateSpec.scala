@@ -340,4 +340,23 @@ class TransformWithStateSpec extends AnyFunSuite {
         StatefulTotals.TbEvent(3L, hourUs / 2 + hourUs, 4L))), "tb_carry")
     assert(got(3L) == StatefulTotals.TbStats(3L, 4L, 3L))
   }
+
+  test("chain and token-bucket states run on generated code, with no interpreted fallback") {
+    // CODEGEN_ONLY turns a projection that fails to compile (a state
+    // encoder's included) into an error instead of a logged fallback to
+    // interpreted evaluation
+    val mode = "spark.sql.codegen.factoryMode"
+    val prior = spark.conf.getOption(mode)
+    spark.conf.set(mode, "CODEGEN_ONLY")
+    try {
+      val chain = runChain(Seq(
+        Seq(StatefulTotals.ChainEvent(4L, "v", 0L, 1L)),
+        Seq(StatefulTotals.ChainEvent(4L, "v", 1L, 2L))), "chain_codegen")
+      assert(chain((4L, "v")) == StatefulTotals.ChainStats(4L, "v", 2L, 1L))
+      val bucket = runBucket(Seq(
+        Seq(StatefulTotals.TbEvent(4L, 0L, 1L)),
+        Seq(StatefulTotals.TbEvent(4L, 1L, 2L))), "tb_codegen")
+      assert(bucket(4L) == StatefulTotals.TbStats(4L, 2L, 2L))
+    } finally prior.fold(spark.conf.unset(mode))(spark.conf.set(mode, _))
+  }
 }
